@@ -40,7 +40,10 @@ object PipelineConfig {
       splunkIndex = secrets.getOrElse("splunk_index", "audit-splunk"),
       // reference: truthiness of the string "true" (lambda_function.py:106-108)
       splunkDisabled = secrets.get("splunk_disabled").exists(_.equalsIgnoreCase("true")),
-      maxBatchSize = secrets.get("max_batch_size").flatMap(_.toIntOption).getOrElse(500),
+      // a non-positive chunk size cannot chunk anything (`grouped(0)` would
+      // throw in every Splunk task): treat it like an unparsable value
+      maxBatchSize = secrets.get("max_batch_size").flatMap(_.toIntOption)
+        .filter(_ > 0).getOrElse(500),
       // reference branch (lambda_function.py:61-66): a secret carrying the
       // master-user credential pair selects basic auth; otherwise the client
       // signs requests with ambient IAM credentials (SigV4).

@@ -3,9 +3,10 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import graft.pipeline.AuditPipeline
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
@@ -53,9 +54,7 @@ object Sinks {
   def writeEs(pruned: DataFrame, dir: String, prefix: String, m: SinkMetrics,
       authMode: AuthMode = AuthMode.SigV4): Long = {
     writeTransportMeta(dir, authMode)
-    val keyed = AuditPipeline.withRoutingKeys(AuditPipeline.skipNulls(pruned), prefix)
-      .dropDuplicates("_id")
-      .withColumn("index_date", to_date(col("datetime")).cast("string"))
+    val keyed = esDocuments(pruned, prefix)
     // Observation rides along the write job — no separate count() pass over
     // the batch (at 100 TB a second full pass per micro-batch is real money).
     val obs = org.apache.spark.sql.Observation()
@@ -72,6 +71,15 @@ object Sinks {
         0L
     }
   }
+
+  /** ES document keying shared by both index writers: null-record skip,
+    * daily `_index` and `_id = random_id` (lambda_function.py:78-81), one
+    * document per `_id` within the batch (ES would upsert the same doc),
+    * and the `index_date` partition column. */
+  private def esDocuments(pruned: DataFrame, prefix: String): DataFrame =
+    AuditPipeline.withRoutingKeys(AuditPipeline.skipNulls(pruned), prefix)
+      .dropDuplicates("_id")
+      .withColumn("index_date", to_date(col("datetime")).cast("string"))
 
   /** Record the transport configuration a real client would be built with
     * (lambda_function.py:61-74: auth mode + port 443 TLS + gzip + cert
@@ -201,9 +209,7 @@ object Sinks {
     */
   def writeEsBulk(pruned: DataFrame, dir: String, prefix: String, m: SinkMetrics,
       transport: BulkTransport, maxRetries: Int = 3, chunkSize: Int = 500): Long = {
-    val keyed = AuditPipeline.withRoutingKeys(AuditPipeline.skipNulls(pruned), prefix)
-      .dropDuplicates("_id")
-      .withColumn("index_date", to_date(col("datetime")).cast("string"))
+    val keyed = esDocuments(pruned, prefix)
     val schema = keyed.schema
     val idIdx = schema.fieldIndex("_id")
     val total = m.esTotal
@@ -236,30 +242,37 @@ object Sinks {
     success.value
   }
 
+  /** The whole row as a JSON object: the Splunk event of the fixed-schema
+    * paths (every column of the frame it is selected from). */
+  private[streaming] val recordJson: Column = to_json(struct(col("*")))
+
+  /** The HEC envelope (lambda_function.py:121-125) around an event-JSON
+    * column: `{"event":<event>,"sourcetype":"json","index":<index>}`, the
+    * one place either fan-out path builds it. The index comes from the
+    * secret, so it is JSON-escaped (as `to_json` escapes) rather than
+    * spliced in raw. A null event gives a null line, which
+    * [[writeSplunkVia]] skips. */
+  private[streaming] def hecEnvelope(event: Column, index: String): Column = {
+    val quotedIndex = new String(JsonStringEncoder.getInstance().quoteAsString(index))
+    concat(lit("{\"event\":"), event,
+      lit(s""","sourcetype":"json","index":"$quotedIndex"}""")).as("line")
+  }
+
   /** Splunk HEC simulator (lambda_function.py:90-102,115-134).
     *
     * Wraps every record in the HEC envelope {"event":…, "sourcetype":"json",
     * "index":…}, then each task posts its partition in chunks of ≤500 — one
     * "HTTP post" = one JSON-lines file. A failed post is logged and dropped
-    * (at-most-once per batch, reference returns 0 and continues). Returns
-    * the number of events delivered.
+    * (at-most-once per batch, reference returns 0 and continues).
     */
   def writeSplunk(full: DataFrame, dir: String, index: String,
       m: SinkMetrics, maxBatchSize: Int = 500,
-      postTag: String = java.util.UUID.randomUUID().toString.take(8)): Unit = {
-    val lines = full
-      .withColumn("line", to_json(struct(
-        struct(full.columns.toIndexedSeq.map(col): _*).as("event"),
-        lit("json").as("sourcetype"),
-        lit(index).as("index"))))
-      .select("line")
-    writeSplunkLines(lines, dir, m, maxBatchSize, postTag)
-  }
+      postTag: String = java.util.UUID.randomUUID().toString.take(8)): Unit =
+    writeSplunkLines(full.select(hecEnvelope(recordJson, index)), dir, m,
+      maxBatchSize, postTag)
 
   /** Same delivery semantics for pre-built HEC envelope lines (single
-    * string column) — the full-fidelity path where the event JSON was
-    * assembled upstream (e.g. from a variant record,
-    * AuditPipeline.fullRecordJson) rather than from fixed columns. */
+    * string column, see [[hecEnvelope]]). */
   def writeSplunkLines(lines: DataFrame, dir: String,
       m: SinkMetrics, maxBatchSize: Int = 500,
       postTag: String = java.util.UUID.randomUUID().toString.take(8)): Unit = {
@@ -269,13 +282,14 @@ object Sinks {
 
   /** Delivery semantics over any [[HecTransport]] — the chunking, counters,
     * and at-most-once drop-on-failure are transport-independent; only the
-    * POST itself is behind the trait. */
+    * POST itself is behind the trait. Null lines carry no event and are
+    * neither posted nor counted. */
   def writeSplunkVia(lines: DataFrame, transport: HecTransport,
       m: SinkMetrics, maxBatchSize: Int = 500): Unit = {
     lines.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
       val pid = TaskContext.getPartitionId()
       var chunkNo = 0
-      it.map(_.getString(0)).grouped(maxBatchSize).foreach { chunk =>
+      it.map(_.getString(0)).filter(_ != null).grouped(maxBatchSize).foreach { chunk =>
         m.splunkTotal.add(chunk.size)
         try {
           transport.post(pid, chunkNo, chunk)

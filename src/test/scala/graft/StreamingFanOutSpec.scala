@@ -28,6 +28,23 @@ class StreamingFanOutSpec extends AnyFunSuite {
        |"request_url": "https://x/$id", "http_method": "GET"}"""
       .stripMargin.replace("\n", " ")
 
+  /** A record carrying every [[graft.pipeline.AuditPipeline.auditSchema]]
+    * field non-null, so the Splunk event's JSON keys show the full shape
+    * (`to_json` omits null fields). */
+  private def fullRecJson(id: Int): String =
+    s"""{"datetime": "2026-02-18T10:30:0${id % 10}", "random_id": "id-$id",
+       |"kind_id": $id, "account_id": 1, "performer_id": 2, "repository_id": 3,
+       |"ip": "1.2.3.$id", "metadata": {"k": "v$id"},
+       |"request_url": "https://x/$id", "http_method": "GET",
+       |"performer_username": "u$id", "performer_email": "u$id@example.com",
+       |"performer_kind": "user", "auth_type": "token", "user_agent": "ua/$id",
+       |"request_id": "req-$id", "x_forwarded_for": "10.0.0.$id"}"""
+      .stripMargin.replace("\n", " ")
+
+  private def lines(dir: String): Seq[String] =
+    Files.list(Paths.get(dir)).iterator().asScala.toSeq
+      .flatMap(f => Files.readAllLines(f).asScala).sorted
+
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
@@ -146,13 +163,33 @@ class StreamingFanOutSpec extends AnyFunSuite {
     // fields the reference reads unconditionally (datetime/random_id)
     val poison1 = b64("this is not json at all")
     val poison2 = b64("""{"kind_id": 42, "ip": "9.9.9.9"}""")
-    stream.addData(b64(recJson(1)), poison1, b64(recJson(2)), poison2)
+    val valid = Seq(b64(fullRecJson(1)), b64(fullRecJson(2)))
+    stream.addData(valid(0), poison1, valid(1), poison2)
     q.processAllAvailable()
     q.stop()
 
     // valid rows reached both sinks
     assert(Sinks.readEsIndex(spark, esDir).count() == 2)
-    assert(spark.read.json(s"$splunkDir/*.jsonl").count() == 2)
+    val splunk = spark.read.json(s"$splunkDir/*.jsonl")
+    assert(splunk.count() == 2)
+    // the Splunk event is the decoded record plus @timestamp: the raw
+    // payload column the quarantine needs never leaves the fan-out
+    val eventCols = splunk.select("event.*").columns.toSet
+    assert(!eventCols.contains("_raw"))
+    assert(eventCols ==
+      (graft.pipeline.AuditPipeline.auditSchema.fieldNames :+ "@timestamp").toSet)
+
+    // the valid rows land exactly as the already-decoded path writes them
+    val (esRef, splunkRef) = (tmp("es_ref"), tmp("splunk_ref"))
+    StreamingFanOut.processBatch(
+      graft.pipeline.AuditPipeline.decodeKinesis(valid.toDF("data"), "data"),
+      esRef, splunkRef, PipelineConfig(), SinkMetrics(spark))
+    def esRows(dir: String): Seq[String] =
+      Sinks.readEsIndex(spark, dir).collect().map(_.toString).toSeq.sorted
+    assert(esRows(esDir) == esRows(esRef))
+    assert(Sinks.readEsIndex(spark, esDir).select("_id").collect().map(_.getString(0)).toSet ==
+      Set("id-1", "id-2"))
+    assert(lines(splunkDir) == lines(splunkRef))
     // poison pills are parked with their RAW payload, replayable
     val dead = spark.read.parquet(dlqDir)
     assert(dead.count() == 2)
@@ -192,6 +229,11 @@ class StreamingFanOutSpec extends AnyFunSuite {
     // one credential alone is not a basic-auth pair
     assert(PipelineConfig.fromSecrets(Map("master_user_name" -> "admin"))
       .esAuthMode == graft.streaming.AuthMode.SigV4)
+    // Splunk chunk size: a positive integer is taken as given; anything
+    // that cannot size a chunk (unparsable, zero, negative) keeps 500
+    for ((raw, want) <- Seq("250" -> 250, "abc" -> 500, "0" -> 500, "-5" -> 500))
+      assert(PipelineConfig.fromSecrets(Map("max_batch_size" -> raw)).maxBatchSize == want,
+        s"max_batch_size $raw")
 
     // the sink simulator records the transport it would build the client with
     val batch = graft.pipeline.AuditPipeline.decodeKinesis(

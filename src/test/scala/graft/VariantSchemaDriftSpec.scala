@@ -68,6 +68,23 @@ class VariantSchemaDriftSpec extends AnyFunSuite {
     assert(metrics.esSuccess.value == 2 && metrics.splunkSuccess.value == 2)
   }
 
+  test("variant fan-out escapes the Splunk index into valid HEC JSON") {
+    import spark.implicits._
+    import graft.streaming.{PipelineConfig, SinkMetrics, StreamingFanOut}
+    // splunk_index comes from the secret; a quote or backslash in it must
+    // be escaped in the envelope, as the fixed-schema path's to_json does
+    val index = "a\"b\\c"
+    val esDir = java.nio.file.Files.createTempDirectory("es_vidx").toString
+    val splunkDir = java.nio.file.Files.createTempDirectory("splunk_vidx").toString
+    val raw = Seq(b64("""{"datetime":"2026-02-18T10:30:00","random_id":"x-1"}""")).toDF("data")
+    StreamingFanOut.processBatchVariant(raw, "data", esDir, splunkDir,
+      PipelineConfig(splunkIndex = index), SinkMetrics(spark))
+    val splunk = spark.read.json(s"$splunkDir/*.jsonl")
+    assert(!splunk.columns.contains("_corrupt_record"), "invalid HEC JSON")
+    assert(splunk.select("index", "event.random_id").collect().map(r =>
+      (r.getString(0), r.getString(1))).toSeq == Seq((index, "x-1")))
+  }
+
   test("strict Python-falsy ip drop on the variant path (lambda_function.py:48-49)") {
     import spark.implicits._
     // (payload-ip, expected extracted ip): JSON 0/false/""/null/0.0 all drop
